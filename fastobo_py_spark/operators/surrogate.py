@@ -28,10 +28,10 @@ under both doc_shas after the decode join) — but it is wrong, so:
   * ``audit_doc_keys`` reports colliding documents as a DataFrame (one
     exchange-free aggregate over the cache; run it once per corpus or
     wire it into a validation batch).
-  * ``strategy="auto"`` keeps the exact string spine end to end — the
-    fallback for corpora where the audit fires, and the twin that
-    ``test_canonical_edges_auto_matches_shuffle_hash`` compares against
-    so the two spines cannot drift.
+  * ``strategy="auto"`` runs the same fused canonicalization kernel and
+    joins keyed on the exact ``doc_sha`` string instead — the fallback
+    for corpora where the audit fires, pinned bit-identical to the
+    surrogate spine by ``test_pipeline_doc_key_audit_fallback``.
   * At true 10¹²-doc scale the right fix is widening the key (two
     independently-seeded xxhash64 columns = 128 bits, P ≈ 10⁻¹⁵); the
     spine is written against the ``doc_key`` column name, so that swap

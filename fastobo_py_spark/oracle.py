@@ -104,8 +104,9 @@ class _UnionFind:
 def build_edges(corpus_rows, canonicalize=True, apply_macros=True):
     """corpus rows → sorted list of (subj, pred, obj, src_tag, doc_sha).
 
-    Mirrors extract_edges + apply_xref_macros + rewrite_edges +
-    equivalence CC + dropDuplicates, implemented sequentially.
+    Mirrors extract_edges_with_macros (triples + treat-xrefs macros) +
+    the alias/obsolete/equivalence rewrite + per-doc dedup of
+    plans.pipeline.canonical_edges, implemented sequentially.
     """
     clauses, _ = parse_rows(corpus_rows)
     by_doc = defaultdict(list)

@@ -43,60 +43,59 @@ MANIFEST_COLS = ("doc_sha", "repo", "path", "commit")
 EDGE_KEY = ["subj", "pred", "obj", "doc_sha"]
 
 
+# the canonical chain's one choice: which document key the spine shards,
+# joins and dedups on. 'shuffle_hash' is the BIGINT doc_key surrogate
+# (production); 'auto' is the exact doc_sha string spine, the fallback
+# after audit_doc_keys reports a surrogate collision
+_SPINE_KEYS = {"shuffle_hash": "doc_key", "auto": "doc_sha"}
+
+
 def canonical_edges(
     clauses: DataFrame,
     strategy: str = "shuffle_hash",
     persisted_out: list | None = None,
-    _spine_key: str | None = None,
 ) -> DataFrame:
     """Clause rows → canonicalized, per-doc-deduped edge table.
 
-    strategy='shuffle_hash' (the 10^12-file default): every dimension —
-    macro table, resolution map, component labels — flows as a
-    doc-key-co-partitioned shuffle-hash join against the already-
-    partitioned clause cache, and the resolution/CC computations shard
-    per document inside one partition-wide mapInPandas kernel. ZERO
-    driver collects, ZERO broadcast
+    Every dimension — macro table, fused canonicalization map — flows as
+    a doc-key-co-partitioned shuffle-hash join against the already-
+    partitioned clause cache, and the alias/redirect/equivalence map is
+    computed per document inside ONE partition-wide mapInPandas kernel
+    (``combined_map_distributed``). ZERO driver collects, ZERO broadcast
     builds, so the job's serial fraction is two job submissions no matter
-    the corpus size. strategy='auto' keeps the scale-adaptive driver
-    shortcuts + gated broadcasts (fastest for interactive small corpora).
+    the corpus size.
 
-    ``persisted_out``: internal caches (dims / resolution map / component
-    labels) are appended here so the caller can ``unpersist()`` them once
-    the edge table is materialized. Long-lived sessions — above all the
-    streaming path, which enters once per micro-batch — MUST pass a list
-    and clean up, or the CacheManager accumulates three relations per call.
+    ``strategy`` selects only the spine key. ``'shuffle_hash'`` runs on
+    the BIGINT surrogate ``doc_key = xxhash64(doc_sha)``
+    (operators/surrogate.py): the 64-hex doc_sha is pruned off every
+    join/explode/aggregate row and restored by one co-partitioned
+    dictionary join at the end. Callers should hash-partition the clause
+    cache on ``doc_key``; a cache without the column is healed here (at
+    the cost of the joins re-exchanging, same as any mispartitioned
+    input). ``'auto'`` runs the same chain on the exact ``doc_sha``
+    string — the fallback for a batch whose ``audit_doc_keys`` fires.
+    Any other value raises ``ValueError``.
 
-    Spine key: the shuffle_hash path runs on the BIGINT surrogate
-    ``doc_key = xxhash64(doc_sha)`` (operators/surrogate.py) — the 64-hex
-    doc_sha is pruned off every join/explode/aggregate row and restored
-    by one co-partitioned dictionary join at the end (collision math and
-    the audit helper live in the surrogate module; ``strategy='auto'``
-    is the exact string-spine twin). Callers should hash-partition the
-    clause cache on ``doc_key``; a cache without the column is healed
-    here (at the cost of the joins re-exchanging, same as any
-    mispartitioned input).
+    ``persisted_out``: internal caches (dims / canonicalization map) are
+    appended here so the caller can ``unpersist()`` them once the edge
+    table is materialized. Long-lived sessions — above all the streaming
+    path, which enters once per micro-batch — MUST pass a list and clean
+    up, or the CacheManager accumulates two relations per call.
     """
     from fastobo_py_spark.operators.canonicalize import (
         combined_map_distributed,
         extract_edges_with_macros,
-        fuse_resolution_components,
-        resolution_map,
     )
-    from fastobo_py_spark.operators.components import equivalence_components_from_clauses
     from fastobo_py_spark.operators.surrogate import with_doc_key
 
-    shj = strategy == "shuffle_hash"
-    # _spine_key: measurement override (tools/surrogate_ab.py) pinning the
-    # shuffle_hash chain to the string spine ("doc_sha") so the surrogate's
-    # effect can be isolated in one session; production callers leave it None
-    key = _spine_key or ("doc_key" if shj else "doc_sha")
-    if shj and key == "doc_key":
+    key = _SPINE_KEYS.get(strategy)
+    if key is None:
+        raise ValueError(f"unknown canonical_edges strategy {strategy!r}; expected one of {sorted(_SPINE_KEYS)}")
+    if key == "doc_key":
         clauses = with_doc_key(clauses)
-    # The dim builders (macro table, alias/replacement map, equivalence
-    # pairs) each rescan their input; against the full clause cache that
-    # was ~5 extra full-table scans — the measured bulk of the graph
-    # stage. One narrow projection holds every dim-bearing row (headers +
+    # The dim builders (macro table, fused-map projection) each rescan
+    # their input; against the full clause cache that was ~5 extra
+    # full-table scans — the measured bulk of the graph stage. One narrow projection holds every dim-bearing row (headers +
     # alias/redirect/equivalence/xref tags, a small fraction of the edge
     # rows), so dim building rescans only it.
     dims = clauses.where(
@@ -105,30 +104,21 @@ def canonical_edges(
     ).persist()
     if persisted_out is not None:
         persisted_out.append(dims)
-    if shj:
-        # eager fill: the res/comps/macro branches otherwise race to
-        # compute the same cache partitions and serialize on block locks
-        # (measured: 100+ task-seconds of cores held while blocked)
-        dims.count()
+    # eager fill: the map/macro branches otherwise race to compute the
+    # same cache partitions and serialize on block locks (measured: 100+
+    # task-seconds of cores held while blocked)
+    dims.count()
 
-    if shj:
-        # resolution ∘ components in ONE exchange + ONE partition-wide
-        # kernel (combined_map_distributed): the compositional pipeline's
-        # ~10 serial stage boundaries over kilobyte dim tables were the
-        # measured constant term dominating the graph stage's N→4N loss.
-        # The edge table then sees two left joins (subj, obj), not four.
-        combined = combined_map_distributed(dims, key_col=key).persist()
-        if persisted_out is not None:
-            persisted_out.append(combined)
-    else:
-        res = resolution_map(dims)
-        comps = equivalence_components_from_clauses(dims, resolution=res, strategy=strategy)
-        combined = fuse_resolution_components(res, comps)
+    # resolution ∘ components in ONE exchange + ONE partition-wide kernel;
+    # the edge table then sees two left joins (subj, obj)
+    combined = combined_map_distributed(dims, key_col=key).persist()
+    if persisted_out is not None:
+        persisted_out.append(combined)
     # macro synthesis is FUSED into the extraction pass (no union) so the
     # clause cache's doc-key partitioning survives to the final dedup
-    e = extract_edges_with_macros(clauses, strategy=strategy, macro_source=dims, key_col=key)
-    e = rewrite_edges(e, clauses, resolution=combined, strategy=strategy, key_col=key)
-    if not shj or key == "doc_sha":
+    e = extract_edges_with_macros(clauses, macro_source=dims, key_col=key)
+    e = rewrite_edges(e, combined, key_col=key)
+    if key == "doc_sha":
         return _dedup_edges(e)
     # decode the surrogate back to doc_sha: the dictionary is one row per
     # document (exchange-free aggregate over the already-partitioned
@@ -422,74 +412,81 @@ def run_pipeline(
     # ~2x the work to report on itself).
     obs = {k: Observation(k) for k in ("clauses", "quarantine", "edges", "nodes", "done")}
 
-    # parse ONCE: both the clause and quarantine paths read this cache
-    # (without it the quarantine write re-ran the mapInPandas parse)
-    parsed = parse_corpus(src).persist()
-    clauses, quarantine = split_parsed(parsed)
-    quarantine = quarantine.observe(obs["quarantine"], F.count(F.lit(1)).alias("n"))
-    quarantine.write.mode("append").parquet(os.path.join(out_dir, "quarantine"))
-
-    # one pass over the corpus feeds every downstream stage; hash-partition
-    # by the BIGINT doc_key surrogate so every doc-keyed operation
-    # downstream (the canonical chain's joins and final dedup, the node
-    # build, the decode dictionary) is satisfied without re-shuffling —
-    # and the partitioner hashes 8 bytes instead of the 64-hex doc_sha
-    from fastobo_py_spark.operators import surrogate as _surrogate
-
-    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    clauses = _surrogate.with_doc_key(clauses).repartition(n_shuffle, "doc_key").persist()
-
-    # surrogate-key audit (ADVICE r5): a 64-bit doc_key collision would
-    # silently merge two documents' edge scopes. The audit is one
-    # exchange-free aggregate over the just-persisted cache; when it
-    # fires, this batch falls back to the exact string spine
-    # (strategy='auto' — the oracle-pinned twin), and the count is
-    # surfaced in the metrics dict either way.
-    n_key_collisions = _surrogate.audit_doc_keys(clauses).count()
-    spine_strategy = "shuffle_hash" if n_key_collisions == 0 else "auto"
-
+    # every persist goes into this list for the finally block: a batch that
+    # raises (write error, lost executor) must not strand its caches in a
+    # long-lived session's CacheManager (streaming/kg._process_batch keeps
+    # the same discipline)
     caches: list[DataFrame] = []
-    if canonicalize:
-        edges = canonical_edges(clauses, strategy=spine_strategy, persisted_out=caches)
-    else:
-        # same spine discipline as the canonical path: the cache is
-        # doc_key-partitioned, so the dedup aggregate must group on
-        # doc_key (a dropDuplicates on doc_sha would re-exchange the
-        # whole edge table — the column isn't in the cache partitioning
-        # anymore) and doc_sha is restored by the dictionary join
-        from fastobo_py_spark.operators.canonicalize import extract_edges_with_macros
+    try:
+        # parse ONCE: both the clause and quarantine paths read this cache
+        # (without it the quarantine write re-ran the mapInPandas parse)
+        parsed = parse_corpus(src).persist()
+        caches.append(parsed)
+        clauses, quarantine = split_parsed(parsed)
+        quarantine = quarantine.observe(obs["quarantine"], F.count(F.lit(1)).alias("n"))
+        quarantine.write.mode("append").parquet(os.path.join(out_dir, "quarantine"))
 
-        macro_dims = clauses.where(
-            (F.col("frame_type") == "Header") | (F.col("tag") == "xref")
-        )
-        # audit fallback mirrors the canonical path: on a collision the
-        # extraction and dedup key on the exact doc_sha (the joins then
-        # re-exchange — the documented cost of a corpus where the
-        # surrogate is not injective)
-        raw_key = "doc_key" if n_key_collisions == 0 else "doc_sha"
-        e = extract_edges_with_macros(
-            clauses, strategy="shuffle_hash", macro_source=macro_dims, key_col=raw_key
-        )
-        if raw_key == "doc_key":
-            edges = _dedup_edges(
-                e, key_col="doc_key", doc_dict=clauses.select("doc_key", "doc_sha").distinct()
-            )
+        # one pass over the corpus feeds every downstream stage; hash-partition
+        # by the BIGINT doc_key surrogate so every doc-keyed operation
+        # downstream (the canonical chain's joins and final dedup, the node
+        # build, the decode dictionary) is satisfied without re-shuffling —
+        # and the partitioner hashes 8 bytes instead of the 64-hex doc_sha
+        from fastobo_py_spark.operators import surrogate as _surrogate
+
+        n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        clauses = _surrogate.with_doc_key(clauses).repartition(n_shuffle, "doc_key").persist()
+        caches.append(clauses)
+
+        # surrogate-key audit (ADVICE r5): a 64-bit doc_key collision would
+        # silently merge two documents' edge scopes. The audit is one
+        # exchange-free aggregate over the just-persisted cache; when it
+        # fires, this batch falls back to the exact string spine
+        # (strategy='auto': the same chain keyed on doc_sha), and the count
+        # is surfaced in the metrics dict either way.
+        n_key_collisions = _surrogate.audit_doc_keys(clauses).count()
+        spine_strategy = "shuffle_hash" if n_key_collisions == 0 else "auto"
+        key = _SPINE_KEYS[spine_strategy]
+
+        if canonicalize:
+            edges = canonical_edges(clauses, strategy=spine_strategy, persisted_out=caches)
         else:
-            edges = _dedup_edges(e)
-    edges = edges.observe(obs["edges"], F.count(F.lit(1)).alias("n"))
-    # clause observation rides the node build: its write is a guaranteed
-    # FULL scan of the clause cache (a limit-style first action — e.g. the
-    # resolution-map probe — would otherwise record a partial count)
-    nodes = build_nodes(clauses.observe(obs["clauses"], F.count(F.lit(1)).alias("n")))
-    nodes = nodes.observe(obs["nodes"], F.count(F.lit(1)).alias("n"))
+            # same spine discipline as the canonical path: the cache is
+            # doc_key-partitioned, so the dedup aggregate must group on
+            # doc_key (a dropDuplicates on doc_sha would re-exchange the
+            # whole edge table — the column isn't in the cache partitioning
+            # anymore) and doc_sha is restored by the dictionary join. On a
+            # collision the extraction and dedup key on the exact doc_sha
+            # (the joins then re-exchange — the documented cost of a corpus
+            # where the surrogate is not injective)
+            from fastobo_py_spark.operators.canonicalize import extract_edges_with_macros
 
-    nodes.write.mode("append").partitionBy("idspace").parquet(os.path.join(out_dir, "nodes"))
-    with_salt(edges, "subj", n_salts).write.mode("append").partitionBy("idspace", "salt").parquet(
-        os.path.join(out_dir, "edges")
-    )
-    parsed.unpersist()
-    for c in caches:
-        c.unpersist()
+            macro_dims = clauses.where(
+                (F.col("frame_type") == "Header") | (F.col("tag") == "xref")
+            )
+            e = extract_edges_with_macros(clauses, macro_source=macro_dims, key_col=key)
+            if key == "doc_key":
+                edges = _dedup_edges(
+                    e, key_col="doc_key", doc_dict=clauses.select("doc_key", "doc_sha").distinct()
+                )
+            else:
+                edges = _dedup_edges(e)
+        edges = edges.observe(obs["edges"], F.count(F.lit(1)).alias("n"))
+        # clause observation rides the node build: its write is a guaranteed
+        # FULL scan of the clause cache (a limit-style first action would
+        # otherwise record a partial count)
+        nodes = build_nodes(clauses.observe(obs["clauses"], F.count(F.lit(1)).alias("n")))
+        nodes = nodes.observe(obs["nodes"], F.count(F.lit(1)).alias("n"))
+
+        nodes.write.mode("append").partitionBy("idspace").parquet(os.path.join(out_dir, "nodes"))
+        with_salt(edges, "subj", n_salts).write.mode("append").partitionBy("idspace", "salt").parquet(
+            os.path.join(out_dir, "edges")
+        )
+    finally:
+        for c in caches:
+            try:
+                c.unpersist()
+            except Exception:
+                pass  # session already torn down mid-failure
 
     # snapshot commit: the batch's part files become visible to
     # read_table_at readers HERE, in one atomic rename — before the
@@ -529,13 +526,12 @@ def run_pipeline(
         "edges": obs["edges"].get["n"],
         "nodes": obs["nodes"].get["n"],
         "doc_key_collisions": n_key_collisions,
-        "spine_strategy": spine_strategy if canonicalize else raw_key,
+        "spine_strategy": spine_strategy if canonicalize else key,
         "manifest_compaction": compaction,
         "snapshot_id": snapshot["snapshot_id"],
         "snapshot_sequence": snapshot["sequence"],
         "elapsed_sec": round(time.time() - t0, 3),
     }
-    clauses.unpersist()
     metrics_dir = os.path.join(out_dir, "_metrics")
     os.makedirs(metrics_dir, exist_ok=True)
     with open(os.path.join(metrics_dir, f"{batch_id}.json"), "w") as fh:

@@ -41,24 +41,20 @@ def sql_obo_edges_by_pred() -> str:
 
 def q_obo_canonical_edges_pato(spark: SparkSession, sf: str) -> DataFrame:
     """Fully canonicalized triples for the pato-like docs (exercises the
-    equivalence-CC fixpoint + URL compaction targets)."""
-    from fastobo_py_spark.operators.canonicalize import apply_xref_macros, rewrite_edges
-    from fastobo_py_spark.operators.components import canonical_rewrite, equivalence_components
+    equivalence closure + URL compaction targets) through the production
+    chain, ``canonical_edges`` on the doc_key-partitioned clause cache."""
+    from fastobo_py_spark.operators.surrogate import with_doc_key
+    from fastobo_py_spark.plans.pipeline import canonical_edges
 
     cl = _clauses(spark).where(F.col("path").startswith("ontologies/pato"))
-    from fastobo_py_spark.operators.triples import extract_edges
-
-    e = extract_edges(cl)
-    e = apply_xref_macros(e, cl)
-    e = rewrite_edges(e, cl)
-    comps = equivalence_components(e)
-    e = canonical_rewrite(e, comps)
-    return (
-        e.dropDuplicates(["subj", "pred", "obj", "doc_sha"])
-        .select("subj", "pred", "obj")
-        .dropDuplicates()
-        .orderBy("subj", "pred", "obj")
-    )
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    caches: list = []
+    e = canonical_edges(with_doc_key(cl).repartition(n, "doc_key"), persisted_out=caches)
+    out = e.select("subj", "pred", "obj").dropDuplicates().orderBy("subj", "pred", "obj")
+    rows = out.collect()
+    for c in caches:
+        c.unpersist()
+    return spark.createDataFrame(rows, out.schema)
 
 
 def sql_obo_canonical_edges_pato() -> str:

@@ -11,12 +11,8 @@ import tempfile
 from pyspark.sql import functions as F
 
 from fastobo_py_spark import oracle
-from fastobo_py_spark.operators.canonicalize import apply_xref_macros, rewrite_edges
-from fastobo_py_spark.operators.components import (
-    canonical_rewrite,
-    connected_components,
-    equivalence_components,
-)
+from fastobo_py_spark.operators.canonicalize import combined_map_distributed
+from fastobo_py_spark.operators.components import connected_components
 from fastobo_py_spark.operators.materialize import build_nodes, top_k_per_idspace
 from fastobo_py_spark.operators.parse import frame_counts, parse_corpus, split_parsed
 from fastobo_py_spark.operators.triples import extract_edges
@@ -61,19 +57,33 @@ def test_edges_raw_vs_oracle(spark, clauses, corpus_rows):
     assert (p, r) == (1.0, 1.0), f"precision={p} recall={r}"
 
 
-def test_edges_canonical_vs_oracle(spark, clauses, corpus_rows):
-    e = extract_edges(clauses)
-    e = apply_xref_macros(e, clauses)
-    e = rewrite_edges(e, clauses)
-    comps = equivalence_components(e)
-    e = canonical_rewrite(e, comps).dropDuplicates(["subj", "pred", "obj", "doc_sha"])
-    got = {(r["subj"], r["pred"], r["obj"], r["doc_sha"]) for r in e.collect()}
-    want = oracle.edge_key_set(oracle.build_edges(corpus_rows, canonicalize=True))
-    p, r = oracle.precision_recall(got, want)
-    assert (p, r) == (1.0, 1.0), f"precision={p} recall={r}"
-
-
 import pytest
+
+
+def _parse_texts(spark, texts):
+    """OBO texts → (clause DataFrame, corpus rows), one document each."""
+    from fastobo_py_spark.schema import CORPUS_SCHEMA
+
+    rows = [
+        {"repo": "r", "path": f"doc{i}.obo", "commit": "c", "lang": "OBO", "content": t}
+        for i, t in enumerate(texts)
+    ]
+    clauses, _ = split_parsed(parse_corpus(spark.createDataFrame(rows, schema=CORPUS_SCHEMA)))
+    return clauses, rows
+
+
+def _kernel_maps(clauses):
+    """combined_map_distributed on the doc_sha spine → {doc_sha: {old: new}}."""
+    got: dict = {}
+    for r in combined_map_distributed(clauses).collect():
+        got.setdefault(r["doc_sha"], {})[r["old"]] = r["new"]
+    return got
+
+
+def _oracle_maps(rows):
+    """oracle.build_canonical_maps without the documents whose map is empty
+    (the kernel emits no rows for them)."""
+    return {sha: m for sha, m in oracle.build_canonical_maps(rows).items() if m}
 
 
 @pytest.mark.parametrize("threshold", [1_000_000, 0])  # driver path / distributed path
@@ -171,6 +181,34 @@ def test_pipeline_doc_key_audit_fallback(spark, corpus, monkeypatch):
         shutil.rmtree(out2, ignore_errors=True)
 
 
+def test_run_pipeline_releases_caches_on_failure(spark, corpus, monkeypatch):
+    """A batch that raises mid-run (here: the node build) must leave the
+    session's CacheManager as it found it — no stranded parse, clause or
+    canonical-chain caches in a long-lived session."""
+    from fastobo_py_spark.plans import pipeline
+
+    def boom(clauses):
+        raise RuntimeError("node build failed")
+
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    before = cache_manager.numCachedEntries()
+    monkeypatch.setattr(pipeline, "build_nodes", boom)
+    out = tempfile.mkdtemp(prefix="kg_fail_")
+    try:
+        with pytest.raises(RuntimeError, match="node build failed"):
+            pipeline.run_pipeline(spark, corpus, out)
+        assert cache_manager.numCachedEntries() == before
+    finally:
+        shutil.rmtree(out, ignore_errors=True)
+
+
+def test_canonical_edges_rejects_unknown_strategy(clauses):
+    from fastobo_py_spark.plans.pipeline import canonical_edges
+
+    with pytest.raises(ValueError, match="shuffle-hash"):
+        canonical_edges(clauses, strategy="shuffle-hash")
+
+
 def test_spark_serializer_roundtrip(spark, clauses, corpus_rows):
     """Distributed serialize → reparse == original clause rows."""
     import hashlib
@@ -200,39 +238,24 @@ def test_spark_serializer_roundtrip(spark, clauses, corpus_rows):
 def test_equivalence_scope_is_per_document(spark):
     """Two documents reusing the same local ids must not leak equivalences
     into each other (reference: each OboDoc resolves independently)."""
-    sha_a, sha_b = "a" * 64, "b" * 64
-    edges = spark.createDataFrame(
-        [
-            # doc A declares X:1 == Y:9; doc B merely *uses* X:1
-            (sha_a, "X:1", "equivalent_to", "Y:9", "equivalent_to", "X"),
-            (sha_a, "X:1", "is_a", "Z:5", "is_a", "X"),
-            (sha_b, "X:1", "is_a", "Z:5", "is_a", "X"),
-        ],
-        "doc_sha string, subj string, pred string, obj string, src_tag string, idspace string",
-    )
-    comps = equivalence_components(edges)
-    got = {(r["doc_sha"], r["subj"]) for r in canonical_rewrite(edges, comps).collect()}
-    # doc A's X:1 rewrites to the component min (X:1 < Y:9 so stays X:1);
-    # the real check: doc B's rows are untouched even when A merges ids
-    assert (sha_b, "X:1") in got
-    comp_rows = {(r["doc_sha"], r["id"]): r["component"] for r in comps.collect()}
-    assert set(k[0] for k in comp_rows) == {sha_a}  # only doc A has labels
+    import hashlib
 
+    from fastobo_py_spark.plans.pipeline import canonical_edges
 
-def test_rewrite_without_broadcast_matches(spark, clauses, corpus_rows):
-    """Force the gated broadcast OFF (threshold 0 → sort-merge fallback):
-    results must be identical to the broadcast plan."""
-    e = extract_edges(clauses)
-    e = apply_xref_macros(e, clauses)
-    smj = rewrite_edges(e, clauses, broadcast_threshold=0)
-    comps = equivalence_components(smj)
-    smj = canonical_rewrite(smj, comps, broadcast_threshold=0).dropDuplicates(
-        ["subj", "pred", "obj", "doc_sha"]
-    )
-    got = {(r["subj"], r["pred"], r["obj"], r["doc_sha"]) for r in smj.collect()}
-    want = oracle.edge_key_set(oracle.build_edges(corpus_rows, canonicalize=True))
-    p, r = oracle.precision_recall(got, want)
-    assert (p, r) == (1.0, 1.0), f"precision={p} recall={r}"
+    # doc A declares X:1 == W:9 (component min W:9); doc B merely uses X:1
+    doc_a = "format-version: 1.2\n\n[Term]\nid: X:1\nequivalent_to: W:9\nis_a: Z:5\n"
+    doc_b = "format-version: 1.2\n\n[Term]\nid: X:1\nis_a: Z:5\n"
+    clauses, rows = _parse_texts(spark, [doc_a, doc_b])
+    sha_a, sha_b = (hashlib.sha256(t.encode()).hexdigest() for t in (doc_a, doc_b))
+    for strategy in ("shuffle_hash", "auto"):
+        got = {
+            (r["subj"], r["pred"], r["obj"], r["doc_sha"])
+            for r in canonical_edges(clauses, strategy=strategy).collect()
+        }
+        assert ("W:9", "is_a", "Z:5", sha_a) in got
+        assert ("X:1", "is_a", "Z:5", sha_b) in got
+        assert got == oracle.edge_key_set(oracle.build_edges(rows, canonicalize=True))
+    assert set(_kernel_maps(clauses)) == {sha_a}  # only doc A has map rows
 
 
 def test_canonical_edges_shuffle_hash_vs_oracle(spark, clauses, corpus_rows):
@@ -303,7 +326,7 @@ def test_pipeline_resume_with_gzip_rows(spark):
 
 
 def test_canonical_edges_auto_matches_shuffle_hash(spark, clauses, corpus_rows):
-    """Both join strategies of the shared flow produce the oracle set —
+    """Both spine keys of the one canonical chain produce the oracle set —
     the exact-string spine (auto) and the BIGINT doc_key surrogate spine
     (shuffle_hash) cannot drift from each other or from the oracle."""
     from fastobo_py_spark.plans.pipeline import canonical_edges
@@ -404,68 +427,69 @@ def test_pipeline_resume_with_broadcast_gate_forced_shut(spark, corpus, monkeypa
 
 
 def test_fused_rewrite_map_equals_sequential(spark):
-    """fuse_resolution_components must equal resolution-then-components
-    applied sequentially, on the adversarial shapes: alias into an
-    equivalence member, component id itself aliased, ids known to only
-    one map, resolution targets outside the components."""
-    from fastobo_py_spark.operators.canonicalize import fuse_resolution_components
+    """The fused kernel composes resolution then components, on the
+    adversarial shapes: an alias into an equivalence member, aliased
+    component representatives, ids known to only one map, a
+    replaced_by chain, and an id in no map at all."""
+    import hashlib
 
-    d = "D" * 64
-    res_rows = [
-        (d, "A:1", "A:2"),   # alias whose target is in a component
-        (d, "B:1", "B:2"),   # alias whose target is NOT in any component
-        (d, "C:1", "C:0"),   # alias target is a component representative
-    ]
-    comps_rows = [
-        (d, "A:2", "A:0"), (d, "A:0", "A:0"),   # A:2 ~ A:0 (rep A:0)
-        (d, "C:0", "C:0"), (d, "C:9", "C:0"),   # C cluster incl. identity rep
-        (d, "E:5", "E:2"), (d, "E:2", "E:2"),   # component no alias touches
-    ]
-    res = spark.createDataFrame(res_rows, "doc_sha string, old string, new string")
-    comps = spark.createDataFrame(comps_rows, "doc_sha string, id string, component string")
-    fused = {
-        (r["old"]): r["new"]
-        for r in fuse_resolution_components(res, comps).where(F.col("doc_sha") == d).collect()
+    text = (
+        "format-version: 1.2\n\n"
+        # alias A:1 of A:2, and A:2 == A:0: A:1 -> A:2 -> A:0
+        "[Term]\nid: A:2\nalt_id: A:1\nequivalent_to: A:0\n\n"
+        # alias target is the component representative C:0 of {C:0, C:9}
+        "[Term]\nid: C:0\nalt_id: C:1\n\n"
+        "[Term]\nid: C:9\nequivalent_to: C:0\n\n"
+        # the pair's member E:0 is itself an alias (of E:5): the component
+        # is {E:3, E:5} after resolution, so its min is E:3, not E:0
+        "[Term]\nid: E:5\nalt_id: E:0\n\n"
+        "[Term]\nid: E:3\nequivalent_to: E:0\n\n"
+        # resolution only: alias target in no component
+        "[Term]\nid: B:2\nalt_id: B:1\n\n"
+        # components only: no alias touches F
+        "[Term]\nid: F:5\nequivalent_to: F:2\n\n"
+        # replaced_by chain G:1 -> G:2 -> G:3
+        "[Term]\nid: G:1\nis_obsolete: true\nreplaced_by: G:2\n\n"
+        "[Term]\nid: G:2\nis_obsolete: true\nreplaced_by: G:3\n\n"
+        "[Term]\nid: Z:77\nis_a: G:1\n"
+    )
+    clauses, rows = _parse_texts(spark, [text])
+    sha = hashlib.sha256(text.encode()).hexdigest()
+    want = {
+        "A:1": "A:0", "A:2": "A:0",
+        "C:1": "C:0", "C:9": "C:0",
+        "E:0": "E:3", "E:5": "E:3",
+        "B:1": "B:2",
+        "F:5": "F:2",
+        "G:1": "G:3", "G:2": "G:3",
     }
-
-    res_d = {o: n for _, o, n in res_rows}
-    comp_d = {i: c for _, i, c in comps_rows}
-
-    def sequential(x):
-        y = res_d.get(x, x)
-        return comp_d.get(y, y)
-
-    every_id = set(res_d) | set(res_d.values()) | set(comp_d) | {"Z:77"}
-    for x in sorted(every_id):
-        want = sequential(x)
-        got = fused.get(x, x)
-        assert got == want, f"{x}: fused={got} sequential={want}"
-    # identity entries must not appear in the map
-    assert all(k != v for k, v in fused.items())
+    assert _kernel_maps(clauses) == _oracle_maps(rows) == {sha: want}
 
 
 def test_per_doc_components_random_graphs_vs_union_find(spark):
-    """Partition-wide distributed CC vs an independent python union-find
-    on 60 random per-document equivalence graphs (seeded): labels must
-    match exactly, including per-document scoping of identical local ids
-    reused across documents."""
+    """The fused kernel's per-document union-find vs the oracle and an
+    independent python union-find, on 60 seeded documents whose
+    equivalent_to clauses reuse the same local ids: labels must match
+    exactly, so no component leaks across documents."""
+    import hashlib
     import random
 
-    from fastobo_py_spark.operators.components import per_doc_components
-
     rng = random.Random(1234)
-    rows = []
+    texts, pairs = [], []
     for d in range(60):
-        sha = f"{d:064x}"
-        n_ids = rng.randint(2, 30)
-        ids = [f"X:{i}" for i in range(n_ids)]  # same local ids in every doc
-        for _ in range(rng.randint(1, 40)):
-            rows.append((sha, rng.choice(ids), rng.choice(ids)))
-    pairs = spark.createDataFrame(rows, "doc_sha string, src string, dst string")
-    got = {
-        (r["doc_sha"], r["id"]): r["component"]
-        for r in per_doc_components(pairs).collect()
-    }
+        ids = [f"X:{i}" for i in range(rng.randint(2, 30))]  # same local ids in every doc
+        doc_pairs = [(rng.choice(ids), rng.choice(ids)) for _ in range(rng.randint(1, 40))]
+        frames: dict = {}
+        for a, b in doc_pairs:
+            frames.setdefault(a, []).append(b)
+        text = f"format-version: 1.2\nontology: doc{d}\n\n" + "\n".join(
+            f"[Term]\nid: {a}\n" + "".join(f"equivalent_to: {b}\n" for b in bs)
+            for a, bs in frames.items()
+        )
+        texts.append(text)
+        sha = hashlib.sha256(text.encode()).hexdigest()
+        pairs += [(sha, a, b) for a, b in doc_pairs]
+    clauses, rows = _parse_texts(spark, texts)
 
     parent: dict = {}
 
@@ -475,42 +499,32 @@ def test_per_doc_components_random_graphs_vs_union_find(spark):
             x = parent[x]
         return x
 
-    for sha, a, b in rows:
+    for sha, a, b in pairs:
         ra, rb = find((sha, a)), find((sha, b))
         if ra != rb:
             lo, hi = (ra, rb) if ra < rb else (rb, ra)
             parent[hi] = lo
-    want = {}
-    for sha, a, b in rows:
+    want: dict = {}
+    for sha, a, b in pairs:
         for v in (a, b):
-            want[(sha, v)] = find((sha, v))[1]
-    assert got == want
-    # no labels leak across documents: every component shares its doc
-    assert all(k[0] == f"{int(k[0][:64], 16):064x}" for k in got)
+            label = find((sha, v))[1]
+            if label != v:
+                want.setdefault(sha, {})[v] = label
+    got = _kernel_maps(clauses)
+    assert got == want == _oracle_maps(rows)
+    assert len(got) > 30  # most documents merge something
 
 
-def test_combined_map_kernel_equals_compositional(spark, clauses):
-    """The single-kernel fused map (production path) must emit the exact
-    row set of the compositional pipeline (resolution kernel → CC kernel
-    → fuse) over the full synthetic corpus dims."""
-    from fastobo_py_spark.operators.canonicalize import (
-        combined_map_distributed,
-        fuse_resolution_components,
-        resolution_map_distributed,
-    )
-    from fastobo_py_spark.operators.components import equivalence_components_from_clauses
-
+def test_combined_map_kernel_equals_compositional(spark, clauses, corpus_rows):
+    """The single-kernel fused map (production path) must emit exactly the
+    oracle's composed map (resolution, then components, then composition:
+    oracle.build_canonical_maps) over the full synthetic corpus dims."""
     dims = clauses.where(
         (F.col("frame_type") == "Header")
         | F.col("tag").isin("alt_id", "replaced_by", "equivalent_to", "xref")
     )
-    fast = {tuple(r) for r in combined_map_distributed(dims).collect()}
-    res = resolution_map_distributed(dims).persist()
-    comps = equivalence_components_from_clauses(dims, resolution=res, strategy="shuffle_hash").persist()
-    slow = {tuple(r) for r in fuse_resolution_components(res, comps).collect()}
-    res.unpersist()
-    comps.unpersist()
-    assert fast == slow and fast
+    got = _kernel_maps(dims)
+    assert got == _oracle_maps(corpus_rows) and got
 
 
 def test_transitive_ancestors_semantics(spark):
@@ -853,16 +867,14 @@ def test_output_compaction_recovery_slash_partition_value(spark):
 
 
 def test_alias_conflict_first_declared_wins(spark):
-    """Two frames claiming the same alt_id: ALL canonicalization paths
-    (alias_map min_by, fused kernel, pure-Python oracle) must keep the
-    FIRST declaration in document order — previously dropDuplicates /
+    """Two frames claiming the same alt_id: the fused kernel, the
+    production chain and the pure-Python oracle must keep the FIRST
+    declaration in document order — previously dropDuplicates /
     setdefault-on-arrival-order kept an arbitrary survivor that could
     differ per run and per strategy."""
     import hashlib
 
-    from fastobo_py_spark.operators.canonicalize import alias_map, combined_map_distributed
-    from fastobo_py_spark.operators.parse import parse_corpus, split_parsed
-    from fastobo_py_spark.schema import CORPUS_SCHEMA
+    from fastobo_py_spark.plans.pipeline import canonical_edges
 
     content = (
         "format-version: 1.2\n\n"
@@ -870,17 +882,11 @@ def test_alias_conflict_first_declared_wins(spark):
         "[Term]\nid: T:2\nalt_id: T:9\n\n"
         "[Term]\nid: T:3\nis_a: T:9\n"
     )
-    corpus = spark.createDataFrame(
-        [("r", "a.obo", "c1", "obo", content)], schema=CORPUS_SCHEMA
-    )
-    clauses, _ = split_parsed(parse_corpus(corpus))
+    clauses, rows = _parse_texts(spark, [content])
     sha = hashlib.sha256(content.encode()).hexdigest()
 
-    am = {(r["alias"]): r["canonical"] for r in alias_map(clauses).collect()}
-    assert am == {"T:9": "T:1"}
-    dims = clauses  # tiny doc: the whole clause set is a valid dims input
-    fused = {
-        (r["old"]): r["new"]
-        for r in combined_map_distributed(dims).where(F.col("doc_sha") == sha).collect()
-    }
-    assert fused.get("T:9") == "T:1"
+    assert oracle.build_canonical_maps(rows)[sha] == {"T:9": "T:1"}
+    # tiny doc: the whole clause set is a valid dims input
+    assert _kernel_maps(clauses) == {sha: {"T:9": "T:1"}}
+    edges = {(r["subj"], r["pred"], r["obj"]) for r in canonical_edges(clauses).collect()}
+    assert ("T:3", "is_a", "T:1") in edges

@@ -645,3 +645,43 @@ def test_stream_kg_imports_legacy_dir(spark):
         assert S.read_table_at(spark, out, "edges").where("idspace = 'LEGACY'").count() == 1
     finally:
         shutil.rmtree(base, ignore_errors=True)
+
+
+def test_stream_kg_doc_key_collision_fallback(spark, monkeypatch):
+    """A micro-batch whose surrogate audit fires switches to the exact
+    doc_sha spine (strategy='auto') and writes the same edge set as a
+    clean stream over the same backlog."""
+    from fastobo_py_spark.operators import surrogate
+    from fastobo_py_spark.sources.corpus import corpus_to_parquet
+    from fastobo_py_spark.streaming import kg
+
+    strategies: list = []
+    real_canonical_edges = kg.canonical_edges
+
+    def spy(clauses, strategy, **kw):
+        strategies.append(strategy)
+        return real_canonical_edges(clauses, strategy=strategy, **kw)
+
+    def fake_audit(clauses):
+        return clauses.sparkSession.createDataFrame(
+            [(7, 2, ["sha_a", "sha_b"])],
+            "doc_key long, n_docs long, doc_shas array<string>",
+        )
+
+    monkeypatch.setattr(kg, "canonical_edges", spy)
+    base = tempfile.mkdtemp(prefix="stream_kg_collision_")
+    try:
+        corpus_dir = f"{base}/corpus"
+        corpus_to_parquet(corpus_dir, n_obo=6, n_noise=2, n_broken=0, n_files=2)
+        kg.stream_build_kg(spark, corpus_dir, f"{base}/clean", f"{base}/ckpt_clean")
+        assert set(strategies) == {"shuffle_hash"}
+        strategies.clear()
+        monkeypatch.setattr(surrogate, "audit_doc_keys", fake_audit)
+        kg.stream_build_kg(spark, corpus_dir, f"{base}/coll", f"{base}/ckpt_coll")
+        assert set(strategies) == {"auto"}
+        cols = ["subj", "pred", "obj", "src_tag", "doc_sha"]
+        e1 = {tuple(r) for r in spark.read.parquet(f"{base}/clean/edges").select(*cols).collect()}
+        e2 = {tuple(r) for r in spark.read.parquet(f"{base}/coll/edges").select(*cols).collect()}
+        assert e1 == e2 and len(e1) > 0
+    finally:
+        shutil.rmtree(base, ignore_errors=True)

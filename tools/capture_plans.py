@@ -13,9 +13,8 @@ from pyspark.sql import functions as F
 
 def main() -> None:
     from fastobo_py_spark import get_spark
-    from fastobo_py_spark.operators.canonicalize import apply_xref_macros
+    from fastobo_py_spark.operators.canonicalize import extract_edges_with_macros
     from fastobo_py_spark.operators.parse import parse_corpus, split_parsed
-    from fastobo_py_spark.operators.triples import extract_edges
     from fastobo_py_spark.queries import q_region_revenue
     from fastobo_py_spark.sources.corpus import corpus_to_parquet
 
@@ -38,8 +37,11 @@ def main() -> None:
         "Corpus scan → OBO filter → Arrow parse (column pruning: only repo/path/content read)",
         clauses.where(F.col("tag") == "is_a").select("doc_sha", "frame_id", "v1"),
     )
-    e = apply_xref_macros(extract_edges(clauses), clauses)
-    show("Edges + macro synthesis (single scan; broadcast macro dim)", e.groupBy("pred").count())
+    e = extract_edges_with_macros(clauses)
+    show(
+        "Edges + macro synthesis (fused into the extraction pass; shuffle-hash macro dim)",
+        e.groupBy("pred").count(),
+    )
 
     from fastobo_py_spark.plans.pipeline import canonical_edges
 
@@ -112,12 +114,11 @@ with `python tools/capture_plans.py`). What to look for, per the
 
 * **PushedFilters / ReadSchema** on parquet scans — predicate pushdown and
   column pruning reach the source (only the consumed columns are read).
-* **BroadcastHashJoin** for every dimension-sized side (header idspace
-  maps, resolution map, CC components, TPC-H dims) — no shuffle of the
-  big side. The production pipeline instead uses strategy=shuffle_hash:
-  **ShuffledHashJoin** with the edge side reusing the clause cache's
-  hash partitioning on the BIGINT ``doc_key = xxhash64(doc_sha)``
-  surrogate (operators/surrogate.py;
+* **BroadcastHashJoin** for the TPC-H dims — no shuffle of the big side.
+* **ShuffledHashJoin** for every dimension of the canonical KG chain
+  (macro dim, fused canonicalization map), with the edge side reusing
+  the clause cache's hash partitioning on the BIGINT
+  ``doc_key = xxhash64(doc_sha)`` surrogate (operators/surrogate.py;
   requireAllClusterKeysForCoPartition=false), so ONLY the tiny dim side
   exchanges — nothing is driver-bounded and the edge table is never
   re-shuffled. doc_sha is restored by one co-partitioned dictionary

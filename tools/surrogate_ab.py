@@ -48,7 +48,8 @@ def _arm(spark, base, key: str) -> dict:
     cache.count()
     cpu0 = bench._tree_cpu_seconds()
     t0 = time.time()
-    n = canonical_edges(cache, strategy="shuffle_hash", _spine_key=key).count()
+    strategy = "shuffle_hash" if key == "doc_key" else "auto"
+    n = canonical_edges(cache, strategy=strategy).count()
     dt = time.time() - t0
     dcpu = bench._tree_cpu_seconds() - cpu0
     cache.unpersist()
